@@ -78,6 +78,11 @@ def _as_col(c):
     return F.col(c) if isinstance(c, str) else c
 
 
+def _sql_ident(name: str) -> str:
+    """Backtick-quoted column name for interpolation into ``F.expr``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def int_dot(a, b, dim: int | None = None):
     """Integer dot product.  With ``dim`` given (and small enough), emits
     a flat element_at-sum (whole-stage-codegen'd; higher-order-function
@@ -100,6 +105,7 @@ def int_dot(a, b, dim: int | None = None):
     if dim is None or dim < 1 or dim > FLAT_INT_MAX_DIM:
         return hof
     if isinstance(a, str) and isinstance(b, str):
+        a, b = _sql_ident(a), _sql_ident(b)
         flat = F.expr(_tree_sum_sql(
             [f"(element_at({a}, {i}) * element_at({b}, {i}))"
              for i in range(1, dim + 1)]
@@ -127,6 +133,8 @@ def float_cosine(a, b, dim: int | None = None):
     # trigger on equal dims).  String inputs build the three sums as ONE
     # parsed SQL expression (same py4j-chatter argument as int_dot).
     if isinstance(a, str) and isinstance(b, str):
+        a, b = _sql_ident(a), _sql_ident(b)
+
         def seq(terms):
             out = terms[0]
             for t in terms[1:]:

@@ -9,7 +9,7 @@ triples(url, subj, pred, obj) → canonical ``nodes`` / ``edges`` tables:
 3. **Similarity edges**: Jaccard over char 3-grams ≥ threshold.
 4. **Connected components**: alternating large-star / small-star iterations
    (Kiveris et al., "Connected Components in MapReduce and Beyond") on an
-   edge DataFrame — O(log n) rounds, each a groupBy-shuffle, with
+   edge DataFrame — O(log n) rounds of four shuffles each, with
    ``localCheckpoint`` per round to cut lineage (at 10^12 rows an
    unbounded lineage chain is an OOM, not a nicety).
 5. **Canonical naming**: each component's most frequent (then longest,
@@ -28,15 +28,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from seq2kg_spark.operators.dedup import lsh_bucket_pairs
+
 
 # --------------------------------------------------------------------------
 # Cache lifetime management.
 #
-# Everything this module persists (two .persist()s in similarity_edges, the
-# per-round localCheckpoints in connected_components, the two naming-chain
-# localCheckpoints in canonicalize) is released as soon as its last consumer
-# has MATERIALIZED — mid-computation where possible, otherwise through a
-# release handle attached to the returned DataFrame(s).  Without this, a
+# Everything this module persists (the norm shingle-set .persist() in
+# similarity_edges, the per-round localCheckpoints in connected_components,
+# the two naming-chain localCheckpoints in canonicalize) is released as
+# soon as its last consumer has MATERIALIZED — mid-computation where
+# possible, otherwise through a release handle attached to the returned
+# DataFrame(s).  Without this, a
 # long-lived session calling canonicalize / incremental_assign per batch
 # (the streaming use case) accumulates cached blocks per invocation and
 # leans on LRU eviction under memory pressure.
@@ -128,7 +131,7 @@ def _char_shingles(col, k: int = 3):
     )
 
 
-# Hot-bucket cap on the (band, sig) self-join; the DuckDB oracle twin
+# Hot-bucket cap on the (band, sig) pair expansion; the DuckDB oracle twin
 # interpolates this same constant (pattern: dedup.MAX_BUCKET_DEFAULT).
 #
 # 1k, not 10k: a bucket at the cap costs O(cap²) candidate rows, and on a
@@ -173,11 +176,12 @@ def similarity_edges(
     banded MinHash over char k-shingles, verified by Jaccard ≥ threshold.
     Returns (a, b) string pairs with a < b.
 
-    The two internal ``persist()``s (norm shingle sets, banded signatures)
-    back the returned plan lazily, so they cannot be unpersisted here.
-    Their release handles go into ``cache_registry`` if given (the
-    canonicalize / incremental_assign path releases them as soon as the
-    edge set is cut from this lineage), else onto the returned DataFrame's
+    The internal ``persist()`` of the norm shingle sets (read by the
+    signatures and by both sides of the verify join) backs the returned
+    plan lazily, so it cannot be unpersisted here.  Its release handle
+    goes into ``cache_registry`` if given (the canonicalize /
+    incremental_assign path releases it as soon as the edge set is cut
+    from this lineage), else onto the returned DataFrame's
     ``_canon_caches`` for :func:`release_caches` after materialization.
 
     ``band_rows`` (r): MinHash rows per band.  A (band, sig) bucket
@@ -186,19 +190,24 @@ def similarity_edges(
     somewhere (same failure the dedup module measured at 181.5 M
     candidates on 50k pages) and the hot-bucket cap then DROPS true pairs
     wholesale.  r>1 suppresses low-similarity collisions before the cap
-    ever fires; the r=1 default keeps the kg_similarity_edges oracle
-    hash-exact (tools/zipf_recall_study.py is the recall/cost evidence
-    per (cap, r) on both corpus shapes).
+    ever fires (tools/zipf_recall_study.py is the recall/cost evidence
+    per (cap, r) on both corpus shapes).  r=1 keeps the historical
+    signature formula; the kg_similarity_edges oracle query pins it.
 
-    ``max_bucket`` is the skew guard on the LSH self-join: a (band, sig)
-    bucket of n members emits n² candidate rows, so one hot signature
-    (short mentions share few shingles — "inc", "llc", digit strings) can
-    go quadratic at web scale.  Buckets over the cap are dropped before
-    the join — their members simply contribute no candidates from that
-    band (they usually collide in a calmer band too; the exact-norm
-    grouping and the CC transitive closure still connect identical and
-    chained mentions).  The cap bounds the join at
+    ``max_bucket`` is the skew guard on the in-bucket pair expansion: a
+    (band, sig) bucket of n members emits n² candidate rows, so one hot
+    signature (short mentions share few shingles — "inc", "llc", digit
+    strings) can go quadratic at web scale.  Buckets over the cap are
+    dropped before pairing — their members simply contribute no
+    candidates from that band (they usually collide in a calmer band too;
+    the exact-norm grouping and the CC transitive closure still connect
+    identical and chained mentions).  The cap bounds the expansion at
     O(n_bands · max_bucket²) rows per bucket, never O(|mentions|²).
+
+    Candidates come from :func:`dedup.lsh_bucket_pairs` — the same
+    single-exchange window-cap → collect_list → pair-expansion shape as
+    ``dedup.minhash_lsh_pairs``, so the signature pipeline is planned
+    once.
     """
     if new_flag_col is None:
         norms = mentions.select("norm").distinct()
@@ -261,31 +270,15 @@ def similarity_edges(
                 F.col("shingles"), lambda s: F.xxhash64(F.col("band"), s)))
     else:
         # r-row band signature: all r row-minima must match for a bucket
-        # collision (P = jaccard^r); fold them into one join key
+        # collision (P = jaccard^r); fold them into one bucket key
         mins = [_row_min(j) for j in range(band_rows)]
         h = (F.md5(F.concat_ws("|", *mins)) if hash_fn == "md5"
              else F.xxhash64(*mins))
-    # keep the persisted handle (sig is reassigned below) for the release
-    sig_raw = banded.select("norm", *flag, "band", h.alias("sig")).persist()
-    sig = sig_raw
-    bucket_ok = (
-        sig.groupBy("band", "sig")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") <= max_bucket)
-        .select("band", "sig")
-    )
-    sig = sig.join(bucket_ok, ["band", "sig"])
-    cand = (
-        sig.alias("x")
-        .join(sig.alias("y"), ["band", "sig"])
-        .where(F.col("x.norm") < F.col("y.norm"))
-    )
-    if new_flag_col:
-        cand = cand.where(F.col("x._new") | F.col("y._new"))
-    cand = (
-        cand.select(F.col("x.norm").alias("a"), F.col("y.norm").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    # shingle arrays are never empty, so no signature is NULL and every
+    # member lands in a real (band, sig) bucket
+    sig = banded.select("norm", *flag, "band", h.alias("sig"))
+    cand = lsh_bucket_pairs(sig, "norm", max_bucket, ("a", "b"),
+                            flag_col="_new" if new_flag_col else None)
     extra_releases = []
     if stats is not None:
         # telemetry for cap/band tuning studies — costs one extra action
@@ -313,7 +306,7 @@ def similarity_edges(
         )
         .select("a", "b")
     )
-    releases = [norm_sets.unpersist, sig_raw.unpersist, *extra_releases]
+    releases = [norm_sets.unpersist, *extra_releases]
     if cache_registry is not None:
         cache_registry.extend(releases)
     else:
@@ -333,9 +326,11 @@ def connected_components(
     ``edges``: (a, b) — any orientation, any dtype with total order.
     Returns (node, component) with component = min member of the component.
 
-    Each round is two groupBy shuffles over the edge set; convergence in
-    O(log n) rounds.  ``localCheckpoint`` truncates lineage so round k+1's
-    plan doesn't embed rounds 1..k (mandatory at scale).
+    Each round is four shuffles over the edge set (a groupBy and a
+    dropDuplicates per large-star and per small-star), and each star reads
+    its input once; convergence in O(log n) rounds.  ``localCheckpoint``
+    truncates lineage so round k+1's plan doesn't embed rounds 1..k
+    (mandatory at scale).
 
     Cache lifetime: round k's checkpoint blocks are released as soon as
     round k+1's checkpoint has materialized (previously every round's edge
@@ -356,10 +351,13 @@ def connected_components(
     )
 
     def star(df: DataFrame, large: bool) -> DataFrame:
-        # neighborhoods of each node (both directions)
-        nbrs = df.select(F.col("u").alias("x"), F.col("v").alias("y")).unionAll(
-            df.select(F.col("v").alias("x"), F.col("u").alias("y"))
-        )
+        # neighborhoods of each node: both orientations from ONE read of
+        # df (a unionAll of two selects would plan the whole upstream twice
+        # per star, four times per round)
+        nbrs = df.select(F.explode(F.array(
+            F.struct(F.col("u").alias("x"), F.col("v").alias("y")),
+            F.struct(F.col("v").alias("x"), F.col("u").alias("y")),
+        )).alias("p")).select("p.x", "p.y")
         grouped = nbrs.groupBy("x").agg(F.collect_set("y").alias("ys"))
         if large:
             # large-star(x): m = min(N(x) ∪ {x}); link every LARGER

@@ -216,6 +216,62 @@ MAX_SHINGLES_DEFAULT = 2048
 MAX_BUCKET_DEFAULT = 10_000
 
 
+def lsh_bucket_pairs(
+    sig: DataFrame,
+    id_col: str,
+    max_bucket: int,
+    out_cols: tuple[str, str],
+    flag_col: str | None = None,
+) -> DataFrame:
+    """Distinct in-bucket candidate pairs of a banded-signature table.
+
+    ``sig`` has one row per (member, band): ``id_col``, ``band``, ``sig``
+    (and ``flag_col``).  Returns ``out_cols`` = (a, b) with a < b for every
+    two members sharing a (band, sig) bucket of at most ``max_bucket``
+    members; with ``flag_col`` only pairs where either side is flagged
+    (the incremental new-member mode of canonicalize.similarity_edges).
+
+    One (band, sig) exchange, and ``sig`` is read once: window-count cap →
+    groupBy → collect_list → in-bucket pair expansion → dropDuplicates.
+    (A cap join-back + (band, sig) self-join plans the upstream signature
+    pipeline three times and pays three exchanges.)  The cap is a window
+    COUNT applied BEFORE the collect_list, so a hot bucket is dropped
+    without materializing its member list in an aggregation buffer (the
+    window exec buffers through a spillable sorter; collect-then-filter
+    would be executor OOM bait, and measured slower at sf1.0: 8.6s vs
+    7.3s).  Pair expansion is bounded at O(n_bands · max_bucket²) rows,
+    never O(|members|²) for one hot signature.
+    """
+    wb = Window.partitionBy("band", "sig")
+    members = [id_col] + ([flag_col] if flag_col else [])
+    buckets = (
+        sig.withColumn("_n", F.count("*").over(wb))
+        .where(F.col("_n") <= max_bucket)
+        .groupBy("band", "sig")
+        .agg(F.collect_list(F.struct(*members)).alias("ms"))
+    )
+    ms = F.col("ms")
+    a_col, b_col = out_cols
+
+    def keep(a, b):
+        ok = b[id_col] > a[id_col]
+        return ok & (a[flag_col] | b[flag_col]) if flag_col else ok
+
+    pair_arr = F.flatten(F.transform(
+        ms,
+        lambda a: F.transform(
+            F.filter(ms, lambda b: keep(a, b)),
+            lambda c: F.struct(a[id_col].alias(a_col),
+                               c[id_col].alias(b_col)),
+        ),
+    ))
+    return (
+        buckets.select(F.explode(pair_arr).alias("p"))
+        .select(f"p.{a_col}", f"p.{b_col}")
+        .dropDuplicates([a_col, b_col])
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -263,14 +319,10 @@ def minhash_lsh_pairs(
     # the only shuffled rows in the whole operator are the (doc, band, sig)
     # triples, the candidate pairs, and the capped verification sets.
     #
-    # Candidate generation is a single groupBy(band, sig) → collect_list →
-    # in-bucket pair expansion.  The former shape (groupBy count for the
-    # bucket cap + join back + self-join on (band, sig)) evaluated the
-    # whole shingle→signature pipeline THREE times (x side, y side, cap)
-    # and paid three exchanges; this shape evaluates it once and pays one
-    # exchange before dropDuplicates — measured 35s → 20s at sf1.0
-    # (99s → 20s including the word_shingles lambda-binding fix), with
-    # bit-identical pairs on both hash paths.
+    # Candidate generation is lsh_bucket_pairs (one (band, sig) exchange
+    # before dropDuplicates) — measured 35s → 20s at sf1.0 against the
+    # former self-join shape (99s → 20s including the word_shingles
+    # lambda-binding fix), with bit-identical pairs on both hash paths.
     base = df.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh"),
@@ -318,39 +370,8 @@ def minhash_lsh_pairs(
     # Hot-bucket guard (drop-before-pairing): members of an over-cap bucket
     # contribute no candidates from that band — true near-dups usually
     # collide in a calmer band too, and exact duplicates are dedup_exact's
-    # job.  Bounds pair expansion at O(n_bands · max_bucket²) rows per
-    # bucket, never O(|corpus|²) for one hot signature.
-    #
-    # The cap is a window COUNT over (band, sig), applied BEFORE the
-    # collect_list: a hot bucket is dropped without ever materializing its
-    # member list in an aggregation buffer (a collect-then-filter cap
-    # would build an O(bucket) in-memory array first — executor OOM bait
-    # at web scale; the window exec buffers through a spillable sorter).
-    # The window and the groupBy share one (band, sig) exchange, and this
-    # shape also measured faster than collect-then-filter at sf1.0
-    # (8.6s → 7.3s for the candidate stage).
-    wb = Window.partitionBy("band", "sig")
-    sig = (
-        sig.withColumn("_n", F.count("*").over(wb))
-        .where(F.col("_n") <= max_bucket)
-        .drop("_n")
-    )
-    buckets = sig.groupBy("band", "sig").agg(
-        F.collect_list("doc_id").alias("ids")
-    )
-    ids = F.col("ids")
-    pair_arr = F.flatten(F.transform(
-        ids,
-        lambda a: F.transform(
-            F.filter(ids, lambda b: b > a),
-            lambda c: F.struct(a.alias("doc_a"), c.alias("doc_b")),
-        ),
-    ))
-    cand = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    # job.
+    cand = lsh_bucket_pairs(sig, "doc_id", max_bucket, ("doc_a", "doc_b"))
     # Verification via per-doc shingle SETS + array_intersect: the naive
     # candidates×shingles join explodes to |cand| × avg-shingles rows; the
     # set join is |cand| rows with a vectorized JVM intersect per row, and

@@ -52,14 +52,6 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def clean_pages(pages: DataFrame, lang: str = "en") -> DataFrame:
-    """Scan-side projection: lang filter (pushable) + T1 clean chain."""
-    return (
-        pages.where(F.col("lang") == lang)
-        .select("url", clean_text_expr(F.col("text")).alias("clean_text"))
-    )
-
-
 def extract_triples(
     pages: DataFrame,
     *,

@@ -1,11 +1,9 @@
-"""S1/S2/S4/S5 — reference CSV/text scans as Spark sources.
+"""S1/S2/S5 — reference CSV scans as Spark sources.
 
 * S1/S2 document CSV: ``(index, content[, industry])``, NO header in
   test.csv (candidate_extraction/triples_from_test_data.py:16-22); the
   index-contiguity assertion of triples_from_contest_data.py:28 becomes a
   validation DataFrame check (never a driver-side loop).
-* S4 documents.txt: one raw document per line
-  (candidate_filtering/data_utils.py:11-14) → ``spark.read.text``.
 * S5 ground-truth CSV → per-doc triple lists: group triples by index into
   arrays (joint_model/train.py:116-142) →
   ``groupBy(index).agg(collect_list(struct(...)))``.
@@ -49,15 +47,6 @@ def validate_index_contiguity(docs: DataFrame) -> DataFrame:
     return (
         docs.withColumn("expected", F.row_number().over(w) - 1)
         .where(F.col("index") != F.col("expected"))
-    )
-
-
-def read_documents_txt(spark: SparkSession, path: str) -> DataFrame:
-    """S4 — one document per line, with a stable line id."""
-    return (
-        spark.read.text(path)
-        .select(F.monotonically_increasing_id().alias("doc_id"),
-                F.col("value").alias("text"))
     )
 
 

@@ -52,12 +52,6 @@ def write_triples_csv(
     )
 
 
-def write_graph_tables(nodes: DataFrame, edges: DataFrame, base: str) -> None:
-    """Graph materialization sink (Iceberg seam: swap to writeTo())."""
-    nodes.write.mode("overwrite").parquet(f"{base}/nodes")
-    edges.write.mode("overwrite").parquet(f"{base}/edges")
-
-
 # --------------------------------------------------------------------------
 # S8 — model checkpoint sink (joint_model/train.py's torch.save analog).
 # The reference checkpoints its tagger with torch.save per epoch; here the

@@ -8,6 +8,7 @@ from seq2kg_spark.operators.canonicalize import (
     similarity_edges,
     mentions_from_triples,
 )
+from seq2kg_spark.operators.dedup import lsh_bucket_pairs
 
 
 def _cc(spark, pairs):
@@ -80,3 +81,48 @@ def test_similarity_edges_hot_bucket_guard(spark):
     m = mentions_from_triples(triples)
     assert similarity_edges(m, threshold=0.5).count() > 0
     assert similarity_edges(m, threshold=0.5, max_bucket=1).count() == 0
+
+
+def _self_join_candidates(sig, max_bucket, flag):
+    """The former candidate formulation, kept as the reference: a groupBy
+    count for the bucket cap, joined back, then a (band, sig) self-join."""
+    bucket_ok = (
+        sig.groupBy("band", "sig")
+        .agg(F.count("*").alias("_n"))
+        .where(F.col("_n") <= max_bucket)
+        .select("band", "sig")
+    )
+    s = sig.join(bucket_ok, ["band", "sig"])
+    cand = (
+        s.alias("x").join(s.alias("y"), ["band", "sig"])
+        .where(F.col("x.norm") < F.col("y.norm"))
+    )
+    if flag:
+        cand = cand.where(F.col("x._new") | F.col("y._new"))
+    return cand.select(F.col("x.norm").alias("a"),
+                       F.col("y.norm").alias("b")).dropDuplicates(["a", "b"])
+
+
+def test_bucket_pairs_match_self_join_reference(spark):
+    """lsh_bucket_pairs (window cap → collect_list → in-bucket expansion)
+    emits exactly the pair set of the former cap-join + self-join shape,
+    with buckets over the cap and with the incremental _new flag."""
+    import random
+
+    rng = random.Random(3)
+    rows = [(f"n{i:02d}", rng.random() < 0.3, band, rng.randrange(5))
+            for i in range(60) for band in range(4)]
+    sig = spark.createDataFrame(
+        rows, "norm string, _new boolean, band int, sig long")
+    sizes = [r["n"] for r in
+             sig.groupBy("band", "sig").agg(F.count("*").alias("n"))
+             .collect()]
+    cap = 12
+    assert max(sizes) > cap and min(sizes) <= cap   # both kinds of bucket
+    for flag in (False, True):
+        got = lsh_bucket_pairs(sig, "norm", cap, ("a", "b"),
+                               flag_col="_new" if flag else None)
+        ref = _self_join_candidates(sig, cap, flag)
+        got_set = {tuple(r) for r in got.collect()}
+        assert got_set == {tuple(r) for r in ref.collect()}
+        assert got.count() == len(got_set) > 0      # distinct pairs

@@ -8,6 +8,7 @@ the extraction pipeline, broadcast joins where a side is small.
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -100,3 +101,48 @@ def test_curate_barrier_plan_shape(spark, pages, tmp_path):
         # filter is a broadcast, not an exchange
         assert plan.count("Exchange hashpartitioning(_h") == 1
         assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+
+
+class _StopAtCheckpoint(Exception):
+    pass
+
+
+def test_cc_first_round_scans_its_input_once(spark, tmp_path, monkeypatch):
+    """Both star steps read their input once (one explode of both
+    orientations, not a unionAll of two selects), so the first round's
+    checkpoint plans the edge source once — the unionAll shape planned it
+    four times per round."""
+    from seq2kg_spark.operators import canonicalize as C
+
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 4)], "a long, b long").write.parquet(path)
+    plans = []
+
+    def spy(df):
+        plans.append(_plan(df))
+        raise _StopAtCheckpoint
+
+    monkeypatch.setattr(C, "_tracked_local_checkpoint", spy)
+    with pytest.raises(_StopAtCheckpoint):
+        C.connected_components(spark.read.parquet(path))
+    tree = plans[0].split("\n\n")[0]
+    assert tree.count("Scan parquet") == 1
+
+
+def test_similarity_edges_has_no_band_sig_join(spark):
+    """Candidates come from one (band, sig) exchange + in-bucket pair
+    expansion: no join is keyed on (band, sig) — neither the cap join-back
+    nor the self-join of the former shape."""
+    from seq2kg_spark.operators.canonicalize import (release_caches,
+                                                     similarity_edges)
+
+    norms = spark.createDataFrame(
+        [("acme corporation",), ("acme corporatian",)], "norm string")
+    sim = similarity_edges(norms)
+    plan = _plan(sim)
+    release_caches(sim)
+    join_keys = [ln for ln in plan.splitlines()
+                 if ln.startswith(("Left keys", "Right keys"))]
+    assert join_keys, "the verify joins must still be there"
+    assert not any("band" in ln or "sig" in ln for ln in join_keys)

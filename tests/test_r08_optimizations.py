@@ -37,12 +37,15 @@ def test_int_dot_flat_matches_hof(spark):
         [(a, b) for (_, a), (_, b) in zip(_vec_rows(rng, 40, 16),
                                           _vec_rows(rng, 40, 16))],
         "a array<double>, b array<double>",
-    ).select(quantized(F.col("a")).alias("qa"), quantized(F.col("b")).alias("qb"))
+    ).select(quantized(F.col("a")).alias("qa"),
+             quantized(F.col("b")).alias("q b"))
     got = df.select(
-        int_dot(F.col("qa"), F.col("qb")).alias("hof"),
-        int_dot(F.col("qa"), F.col("qb"), dim=16).alias("flat"),
+        int_dot(F.col("qa"), F.col("q b")).alias("hof"),
+        int_dot(F.col("qa"), F.col("q b"), dim=16).alias("flat"),
+        # column NAMES take the parsed-SQL form; "q b" needs quoting there
+        int_dot("qa", "q b", dim=16).alias("flat_str"),
     ).collect()
-    assert all(r["hof"] == r["flat"] for r in got)
+    assert all(r["hof"] == r["flat"] == r["flat_str"] for r in got)
 
 
 def test_int_dot_mismatched_length_falls_back(spark):
@@ -79,15 +82,16 @@ def test_float_cosine_flat_bit_exact(spark):
     df = spark.createDataFrame(
         [(a, b) for (_, a), (_, b) in zip(_vec_rows(rng, 40, 24),
                                           _vec_rows(rng, 40, 24))],
-        "a array<double>, b array<double>",
+        "a array<double>, `b b` array<double>",
     )
     got = df.select(
-        float_cosine(F.col("a"), F.col("b")).alias("hof"),
-        float_cosine(F.col("a"), F.col("b"), dim=24).alias("flat"),
+        float_cosine(F.col("a"), F.col("b b")).alias("hof"),
+        float_cosine(F.col("a"), F.col("b b"), dim=24).alias("flat"),
+        float_cosine("a", "b b", dim=24).alias("flat_str"),
     ).collect()
     # left-deep flat sum preserves the fold's accumulation order ⇒ the
     # doubles must be IDENTICAL, not merely close
-    assert all(r["hof"] == r["flat"] for r in got)
+    assert all(r["hof"] == r["flat"] == r["flat_str"] for r in got)
 
 
 def test_simhash64_matches_reference(spark):
